@@ -2374,11 +2374,11 @@ def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for i in range((n + 15) // 16)
                 )[:n]
                 img = _np.frombuffer(buf, _np.uint8).reshape(h, w)
-                dec = decode_gif(encode_gif(img, interlace=d % 2 == 1))
+                dec = decode_gif(encode_gif(img, interlace=(d // 20) % 2 == 1))
                 gray = dec[:, :, 0]
                 rows.append(
                     (
-                        d, w, h, d % 2 == 1,
+                        d, w, h, (d // 20) % 2 == 1,
                         bool((gray == img).all() and (dec[:, :, 1] == img).all()),
                         _hl.md5(gray.tobytes().hex().encode()).hexdigest(),
                     )
@@ -2401,7 +2401,7 @@ def q_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real BMP codec (sources/bmp.py), EXACT-oracled: the same md5-chain
     buffer, written as an 8-bit grayscale-palette BI_RGB DIB
-    (alternating bottom-up / top-down row order by doc parity), decoded
+    (bottom-up or top-down row order by ``(doc_id // 20) % 2``), decoded
     back, decoded pixels fingerprinted; the DuckDB twin rebuilds the
     buffer arithmetically."""
     import hashlib as _hl
@@ -2429,11 +2429,11 @@ def q_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for i in range((n + 15) // 16)
                 )[:n]
                 img = _np.frombuffer(buf, _np.uint8).reshape(h, w)
-                dec = decode_bmp(encode_bmp(img, top_down=d % 2 == 1))
+                dec = decode_bmp(encode_bmp(img, top_down=(d // 20) % 2 == 1))
                 gray = dec[:, :, 0]
                 rows.append(
                     (
-                        d, w, h, d % 2 == 1,
+                        d, w, h, (d // 20) % 2 == 1,
                         bool((gray == img).all() and (dec == dec[:, :, :1]).all()),
                         _hl.md5(gray.tobytes().hex().encode()).hexdigest(),
                     )
@@ -7524,7 +7524,7 @@ hx as (
          ) as hexstr
   from b group by doc_id, width, height)
 select doc_id, width, height,
-       doc_id % 2 = 1 as interlaced,
+       (doc_id // 20) % 2 = 1 as interlaced,
        true as roundtrip_ok,
        md5(substr(hexstr, 1, 2 * width * height)) as pixels_md5
 from hx order by doc_id
@@ -7548,7 +7548,7 @@ hx as (
          ) as hexstr
   from b group by doc_id, width, height)
 select doc_id, width, height,
-       doc_id % 2 = 1 as top_down,
+       (doc_id // 20) % 2 = 1 as top_down,
        true as roundtrip_ok,
        md5(substr(hexstr, 1, 2 * width * height)) as pixels_md5
 from hx order by doc_id
@@ -8579,7 +8579,7 @@ def _q_contract_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_contract_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G10/multimodal full surface over the contract table's media spans:
     REAL PNG payloads → real decode → features + resize (real pixel
-    resample), frame sampling of a fake-container video per doc, and
+    resample), frame sampling of an MJPEG-in-AVI video per doc, and
     (r4) REAL WAV payloads → real decode → integer audio rollups.
     Rows-only driver check; the codecs themselves are exact-oracled via
     png_roundtrip / wav_features and pytest-gated

@@ -35,27 +35,15 @@ import sys
 import tempfile
 import time
 
+from perfbench.observe import cpu_control, host_stamp
 
-def _cpu_control() -> float:
-    """Fixed-work raw-CPU spin (32 procs × 20M-iter loop), reported in the
-    bench JSON as ``cpu_control_sec`` so every recorded BENCH_r{N}.json
-    carries its own host-health calibration: ~2.5-4 s on this host when
-    healthy.  Needed because shared-tenancy noise windows reach ~3.7×
-    (BENCH/BASELINE.md §1) — a Spark number recorded inside one is
-    meaningless without this stamp."""
-    import multiprocessing as mp
-
-    t0 = time.perf_counter()
-    with mp.get_context("fork").Pool(32) as pool:
-        pool.map(_spin, range(32))
-    return round(time.perf_counter() - t0, 2)
-
-
-def _spin(_: int) -> int:
-    x = 0
-    for i in range(20_000_000):
-        x += i * i
-    return x
+#: The host-health CPU control (perfbench/observe.cpu_control): wall
+#: seconds of a fixed pure-Python spin in one spawned process per usable
+#: CPU, stamped into every JSON as ``cpu_control_*``.  About 0.15-0.3 s
+#: on a quiet 4-CPU host, higher while other tenants hold the cores —
+#: shared-tenancy noise reaches ~3.7× (BENCH/BASELINE.md §1), so a Spark
+#: number recorded without its stamp is meaningless.
+NPROC = len(os.sched_getaffinity(0))
 
 
 def _contract_path(n_docs: int, seed: int = 42) -> str:
@@ -196,7 +184,7 @@ def run_headline(sf_dir: str, cpus: int, n_docs: int) -> dict:
         "cpus": cpus,
         "contract_docs": n,
         "total_sec": round(sum(timings.values()), 3),
-        "cpu_control_sec": _cpu_control(),
+        "cpu_control_sec": cpu_control(NPROC),
     }
 
 
@@ -211,7 +199,7 @@ def run_contract_only(n_docs: int) -> dict:
 
     if n_docs > 400_000:
         os.environ.setdefault("SPARK_DRIVER_MEM", "28g")
-    pre = _cpu_control()
+    pre = cpu_control(NPROC)
     src = _contract_path(n_docs)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("ocr-bench-contract", master=f"local[{cpus}]")
@@ -225,7 +213,7 @@ def run_contract_only(n_docs: int) -> dict:
         "median_sec": round(med_dt, 3),
         "cpus": cpus,
         "cpu_control_pre": pre,
-        "cpu_control_post": _cpu_control(),
+        "cpu_control_post": cpu_control(NPROC),
     }
 
 
@@ -271,7 +259,7 @@ def run_scaling_executors(n_small: int, n_docs: int, cores: int = 2) -> dict:
     leg_controls = {}
     mem_mb = int(os.environ.get("OCR_SPARK_EXEC_MEM_MB", "9216"))
     for n_exec in (n_small, 4 * n_small):
-        pre = _cpu_control()  # per-leg host-health stamps, as in run_scaling
+        pre = cpu_control(NPROC)  # per-leg host-health stamps, as in run_scaling
         spark = get_spark(
             f"ocr-scale-exec-{n_exec}",
             master=f"local-cluster[{n_exec},{cores},{mem_mb}]",
@@ -285,7 +273,7 @@ def run_scaling_executors(n_small: int, n_docs: int, cores: int = 2) -> dict:
         results[n_exec] = n / med_dt
         spark.stop()
         leg_controls[f"cpu_control_pre_{n_exec}exec"] = pre
-        leg_controls[f"cpu_control_post_{n_exec}exec"] = _cpu_control()
+        leg_controls[f"cpu_control_post_{n_exec}exec"] = cpu_control(NPROC)
     t_n, t_4n = results[n_small], results[4 * n_small]
     eff = t_4n / (4.0 * t_n)
     return {
@@ -299,7 +287,7 @@ def run_scaling_executors(n_small: int, n_docs: int, cores: int = 2) -> dict:
         },
         "sf": f"contract table n_docs={n_docs}",
         "contract_docs": n_docs,
-        "cpu_control_sec": _cpu_control(),
+        "cpu_control_sec": cpu_control(NPROC),
     }
 
 
@@ -317,7 +305,7 @@ def _bw_copy_work(_) -> float:
 
 def _bw_control(n: int) -> float:
     """Aggregate DRAM copy bandwidth (GB/s) with ``n`` concurrent workers,
-    median of 3.  The scaling twin of ``_cpu_control``: the raw-CPU spin
+    median of 3.  The scaling twin of the CPU control: a raw-CPU spin
     shows ~4× hardware from 2→8 cores, but a memory-BANDWIDTH-bound
     workload sees only ~2.6× (measured: 19.7 → 51.8 GB/s median) because
     the legs share one memory system — so a string/Arrow-heavy job's
@@ -357,7 +345,7 @@ def run_scaling(n_small: int, n_docs: int) -> dict:
         # unchanged kernel (BENCH/BASELINE.md §2).  A single end-of-run
         # control cannot attribute noise to a leg; a control before and
         # after EACH leg can.
-        pre = _cpu_control()
+        pre = cpu_control(NPROC)
         spark = get_spark(f"ocr-scale-{cpus}", master=f"local[{cpus}]")
         # Both legs use the FULL convergence warm-up (cap 12 / stall 4).
         # A shorter run-count cap is NOT protocol-equivalent across legs:
@@ -370,7 +358,7 @@ def run_scaling(n_small: int, n_docs: int) -> dict:
         results[cpus] = n / med_dt
         spark.stop()
         leg_controls[f"cpu_control_pre_local[{cpus}]"] = pre
-        leg_controls[f"cpu_control_post_local[{cpus}]"] = _cpu_control()
+        leg_controls[f"cpu_control_post_local[{cpus}]"] = cpu_control(NPROC)
     t_n, t_4n = results[n_small], results[4 * n_small]
     eff = t_4n / (4.0 * t_n)
     bw_n, bw_4n = _bw_control(n_small), _bw_control(4 * n_small)
@@ -388,7 +376,7 @@ def run_scaling(n_small: int, n_docs: int) -> dict:
         },
         "sf": f"contract table n_docs={n_docs}",
         "contract_docs": n_docs,
-        "cpu_control_sec": _cpu_control(),
+        "cpu_control_sec": cpu_control(NPROC),
     }
 
 
@@ -446,7 +434,7 @@ def run_scaling_shuffle(n_small: int, mult: int = 10) -> dict:
     leg_controls = {}
     n_docs = None
     for cpus in (n_small, 4 * n_small):
-        pre = _cpu_control()
+        pre = cpu_control(NPROC)
         spark = get_spark(f"lsh-scale-{cpus}", master=f"local[{cpus}]")
         n_docs = spark.read.parquet(src).count()
 
@@ -471,7 +459,7 @@ def run_scaling_shuffle(n_small: int, mult: int = 10) -> dict:
         results[cpus] = n_docs / med
         spark.stop()
         leg_controls[f"cpu_control_pre_local[{cpus}]"] = pre
-        leg_controls[f"cpu_control_post_local[{cpus}]"] = _cpu_control()
+        leg_controls[f"cpu_control_post_local[{cpus}]"] = cpu_control(NPROC)
     t_n, t_4n = results[n_small], results[4 * n_small]
     bw_n, bw_4n = _bw_control(n_small), _bw_control(4 * n_small)
     return {
@@ -488,7 +476,7 @@ def run_scaling_shuffle(n_small: int, mult: int = 10) -> dict:
         },
         "sf": f"sf0.1 documents x{mult} = {n_docs} docs",
         "contract_docs": n_docs,
-        "cpu_control_sec": _cpu_control(),
+        "cpu_control_sec": cpu_control(NPROC),
     }
 
 
@@ -552,7 +540,7 @@ def run_soak_bundle(mega_pages: int = 1000, n_normal: int = 2000) -> dict:
     from ocr_spark import get_spark
     from ocr_spark.jobs.export_all import document_bundle
 
-    pre = _cpu_control()
+    pre = cpu_control(NPROC)
     peaks: dict = {}
     stop = threading.Event()
     sampler = threading.Thread(
@@ -646,7 +634,7 @@ transform(sequence(0, 1), p -> array(transform(sequence(1, 20), i ->
         },
         "sf": f"synthetic page IR, tail up to {mega_pages} pages/doc",
         "cpu_control_pre": pre,
-        "cpu_control_sec": _cpu_control(),
+        "cpu_control_sec": cpu_control(NPROC),
     }
 
 
@@ -667,7 +655,7 @@ def run_soak(
     from ocr_spark.jobs.edits import apply_edits, compact_overlay
     from ocr_spark.jobs.extract_job import read_documents, run_extraction
 
-    pre = _cpu_control()
+    pre = cpu_control(NPROC)
     cached = _contract_path(n_docs)
     work = tempfile.mkdtemp(prefix="ocr_soak_")
     input_path = os.path.join(work, "documents.parquet")
@@ -791,7 +779,7 @@ def run_soak(
         "sf": f"contract table n_docs={n_docs}",
         "contract_docs": n_docs,
         "cpu_control_pre": pre,
-        "cpu_control_sec": _cpu_control(),
+        "cpu_control_sec": cpu_control(NPROC),
     }
 
 
@@ -852,6 +840,7 @@ def main() -> None:
             # small smoke runs (OCR_SPARK_BENCH_DOCS below the committed
             # 100k baseline) skip it
             out["north_1m"] = _north_1m_row()
+    out["host"] = host_stamp()
     print(json.dumps(out))
 
 

@@ -2,24 +2,19 @@
 columns with typed metadata, processed through Arrow-batched ``mapInPandas``
 kernels.
 
-Image decode is REAL for PNG — the format the reference itself emits
-(page rasters at server/celery_app.py:903-913, crops at :1062-1081) —
-via the pure-stdlib codec in sources/png.py, and REAL for JPEG
-(baseline and progressive) — the format uploads and crops keep when the
-original was a JPEG
-(server/src/utils/file.py:92-98, server/celery_app.py:1070-1081) — via
-sources/jpeg.py: every kernel here sniffs the content bytes
-(sources/imagecodec.py) and routes both through real
-decode → grayscale → box-resample pixels — and since r5 GIF and BMP
-decode for real too (sources/gif.py, sources/bmp.py, one
-sources/imagecodec.py dispatch).  Audio decode is REAL for WAV/RIFF
-PCM and G.711 (sources/wav.py) the same way.  Remaining payloads (WebP
-pixels, mp3/ogg, non-MJPEG video — and corrupt files) fall back to the deterministic fake
-behind ``FAKE_DECODE`` / a clearly-marked ``NotImplementedError`` —
-those codecs genuinely aren't in this container — and everything
-Spark-side is real and tested either way: schemas, batch iteration,
-partition sizing, UDF signatures, and the metadata columns downstream
-operators key on.
+Every format the reference writes or keeps has a real in-repo codec:
+PNG — the format the reference itself emits (page rasters at
+server/celery_app.py:903-913, crops at :1062-1081) — via
+sources/png.py; JPEG, baseline and progressive — the format uploads and
+crops keep when the original was a JPEG (server/src/utils/file.py:92-98,
+server/celery_app.py:1070-1081) — via sources/jpeg.py; GIF and BMP via
+sources/gif.py and sources/bmp.py.  The image kernels sniff the content
+bytes once (sources/imagecodec.sniff_decode) and run real decode →
+grayscale → box-resample pixels.  Audio decode is real for WAV/RIFF PCM
+and G.711 (sources/wav.py), video for MJPEG-in-AVI (sources/avi.py,
+every frame a baseline JPEG).  Payloads with no in-repo codec (WebP
+pixels, mp3/ogg, non-MJPEG video) and corrupt files degrade to a
+deterministic digest fake, so a bad payload never kills the Arrow stage.
 
 This is the Spark landing zone for the reference's media path: cropped
 image regions (server/celery_app.py:1062-1081) become ``media(doc_id,
@@ -38,24 +33,20 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ocr_spark.sources.png import (  # noqa: E402  (real PNG codec path)
+from ocr_spark.sources.imagecodec import sniff_decode
+from ocr_spark.sources.png import (
     encode_png,
     grid8,
     resample_image,
     to_gray,
 )
-
-#: governs only the fallback for formats WITHOUT an in-repo codec
-#: (WebP pixels, mp3/ogg, non-MJPEG video); PNG/JPEG/GIF/BMP content
-#: always takes the real sources/*.py codec paths.
-FAKE_DECODE = True
 
 MEDIA_SCHEMA = (
     "doc_id string, media_ref string, content binary, mime string"
@@ -68,13 +59,7 @@ FEATURE_SCHEMA = (
 
 def _fake_decode(content: bytes) -> tuple[int, int, np.ndarray]:
     """Deterministic fake decoder for payloads with no in-repo codec:
-    derives (width,
-    height, 8-dim feature) purely from the bytes, so tests are stable.
-    A real build swaps this for PIL/ffmpeg behind the same signature."""
-    if not FAKE_DECODE:
-        raise NotImplementedError(
-            "real media decode requires PIL/ffmpeg, not present in this container"
-        )
+    derives (width, height, 8-dim feature) purely from the bytes."""
     h = hashlib.sha1(content).digest()
     width = 64 + h[0] % 192
     height = 64 + h[1] % 192
@@ -82,73 +67,70 @@ def _fake_decode(content: bytes) -> tuple[int, int, np.ndarray]:
     return width, height, feat
 
 
-def _real_image(content: bytes) -> np.ndarray | None:
-    """The sniff-dispatch: PNG or JPEG bytes → REAL decoded
-    pixel array (sources/imagecodec.py); anything else — or a corrupt /
-    unsupported-variant stream, which must degrade to the fake, never
-    kill the Arrow stage — → None, sending the caller to the fake seam."""
-    from ocr_spark.sources.imagecodec import sniff_decode
-
-    return sniff_decode(content)
-
-
-def _decode(content: bytes) -> tuple[int, int, np.ndarray]:
-    """(width, height, 8-dim float32 feature).  PNG / JPEG (baseline or
-    progressive) / GIF / BMP → real pixels: the feature is the 8 column
-    means of the 8×8 box-resampled grayscale grid, /255 — a real (if
-    tiny) visual descriptor.  WebP (and out-of-scope variants) → REAL
+def _decode(content: bytes) -> tuple[np.ndarray | None, int, int]:
+    """(pixels | None, width, height) — the one fallback order every
+    image kernel shares.  PNG / JPEG / GIF / BMP → real decoded pixels
+    and their geometry.  WebP and unsupported variants → None with REAL
     header geometry (sources/imagemeta.py — dimensions need no pixel
-    codec) with the pixel feature falling back to the deterministic
-    fake.  Anything else → fake entirely."""
-    img = _real_image(content)
+    codec).  Anything else, corrupt streams included → None with the
+    digest fake's geometry."""
+    img = sniff_decode(content)
     if img is not None:
-        gray = to_gray(img)
-        h, w = gray.shape
-        feat = (grid8(gray).mean(axis=0) / 255.0).astype(np.float32)
-        return w, h, feat
+        return img, img.shape[1], img.shape[0]
     from ocr_spark.sources.imagemeta import sniff_dimensions
 
     meta = sniff_dimensions(content)
     if meta is not None:
         _fmt, w, h = meta
-        return w, h, _fake_decode(content)[2]
-    return _fake_decode(content)
+        return None, w, h
+    w, h, _ = _fake_decode(content)
+    return None, w, h
+
+
+def _map_payloads(
+    media: DataFrame, schema: str, row: Callable[[bytes], tuple]
+) -> DataFrame:
+    """The batch loop every per-payload kernel shares: one narrow
+    Arrow-batched pass where each media row's ``content`` (null → empty
+    bytes) becomes ``(doc_id, media_ref, mime) + row(content)`` — the
+    columns of ``schema``, in order.  Decode cost is amortized per batch
+    (reference batching moral server/src/engines/ocr_tesserocr.py:102-124)."""
+    columns = [col.split()[0] for col in schema.split(",")]
+
+    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                [
+                    (doc_id, ref, mime,
+                     *row(bytes(content) if content is not None else b""))
+                    for doc_id, ref, content, mime in zip(
+                        pdf["doc_id"], pdf["media_ref"], pdf["content"],
+                        pdf["mime"],
+                    )
+                ],
+                columns=columns,
+            )
+
+    return media.mapInPandas(fn, schema)
+
+
+def _features(b: bytes) -> tuple:
+    """(n_bytes, sha1, width, height, feat).  Real pixels → the feature
+    is the 8 column means of the 8×8 box-resampled grayscale grid, /255
+    — a real (if tiny) visual descriptor; no pixels → the digest fake's
+    feature (with real header geometry where ``_decode`` found it)."""
+    img, w, h = _decode(b)
+    if img is not None:
+        feat = (grid8(to_gray(img)).mean(axis=0) / 255.0).astype(np.float32)
+    else:
+        feat = _fake_decode(b)[2]
+    return len(b), hashlib.sha1(b).hexdigest(), w, h, feat.tolist()
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
     """binary content → typed metadata + feature vector, one Arrow-batched
-    pass (decode amortized per batch, reference batching moral
-    server/src/engines/ocr_tesserocr.py:102-124)."""
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, ref, content, mime in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"], pdf["mime"]
-            ):
-                b = bytes(content) if content is not None else b""
-                w, hgt, feat = _decode(b)
-                rows.append(
-                    (
-                        doc_id,
-                        ref,
-                        mime,
-                        len(b),
-                        hashlib.sha1(b).hexdigest(),
-                        w,
-                        hgt,
-                        feat.tolist(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "mime", "n_bytes", "sha1",
-                    "width", "height", "feat",
-                ],
-            )
-
-    return media.mapInPandas(fn, FEATURE_SCHEMA)
+    pass."""
+    return _map_payloads(media, FEATURE_SCHEMA, _features)
 
 
 RESIZED_SCHEMA = (
@@ -173,49 +155,29 @@ def resize_media(media: DataFrame, max_px: int = 128) -> DataFrame:
     from ocr_spark.sources.bmp import encode_bmp, is_bmp
     from ocr_spark.sources.jpeg import encode_jpeg, is_jpeg
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, ref, content, mime in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"], pdf["mime"]
-            ):
-                b = bytes(content) if content is not None else b""
-                img = _real_image(b)
-                if img is not None:
-                    hgt, w = img.shape[:2]
-                else:
-                    # real header geometry for GIF/BMP/WebP, the digest
-                    # fake otherwise (_decode's dispatch)
-                    w, hgt, _ = _decode(b)
-                scale = min(1.0, max_px / max(w, hgt))
-                ow = max(1, int(w * scale + 0.5))
-                oh = max(1, int(hgt * scale + 0.5))
-                if img is not None:
-                    resized = resample_image(img, ow, oh)
-                    if is_jpeg(b):
-                        out = encode_jpeg(resized)
-                    elif is_bmp(b):
-                        out = encode_bmp(resized)
-                    else:
-                        out = encode_png(resized)
-                else:
-                    # fake resample: size-stamped digest of the bytes
-                    out = (
-                        struct.pack("<II", ow, oh)
-                        + hashlib.sha256(
-                            b + struct.pack("<II", ow, oh)
-                        ).digest()
-                    )
-                rows.append((doc_id, ref, mime, w, hgt, ow, oh, out))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "mime", "width", "height",
-                    "out_width", "out_height", "content",
-                ],
+    def row(b: bytes) -> tuple:
+        img, w, hgt = _decode(b)
+        # a header may declare 0×0: clamp, never divide by zero
+        scale = min(1.0, max_px / max(w, hgt, 1))
+        ow = max(1, int(w * scale + 0.5))
+        oh = max(1, int(hgt * scale + 0.5))
+        if img is not None:
+            resized = resample_image(img, ow, oh)
+            if is_jpeg(b):
+                out = encode_jpeg(resized)
+            elif is_bmp(b):
+                out = encode_bmp(resized)
+            else:
+                out = encode_png(resized)
+        else:
+            # fake resample: size-stamped digest of the bytes
+            out = (
+                struct.pack("<II", ow, oh)
+                + hashlib.sha256(b + struct.pack("<II", ow, oh)).digest()
             )
+        return w, hgt, ow, oh, out
 
-    return media.mapInPandas(fn, RESIZED_SCHEMA)
+    return _map_payloads(media, RESIZED_SCHEMA, row)
 
 
 FRAME_SCHEMA = (
@@ -223,96 +185,80 @@ FRAME_SCHEMA = (
     "content binary"
 )
 
-_FRAME_MAGIC = b"FVC1"  # fake video container: magic, then length-prefixed frames
-
 
 def synth_video_for_refs(refs: DataFrame, n_frames: int = 24) -> DataFrame:
-    """Deterministic fake video containers for (doc_id, media_ref) rows:
-    ``FVC1`` magic + ``n_frames`` length-prefixed frame blocks (the same
-    length-prefixed container discipline as sources/ingest.py page
-    containers).  Data-gen utility for tests/bench."""
+    """Deterministic MJPEG-in-AVI videos for (doc_id, media_ref) rows:
+    ``n_frames`` real 16×16 grayscale JPEG frames with digest-seeded
+    pixels at 25 fps (sources/avi.write_avi_mjpeg), so sampled frames
+    decode to real pixels.  Data-gen utility for tests/bench."""
+    from ocr_spark.sources.avi import write_avi_mjpeg
+    from ocr_spark.sources.jpeg import encode_jpeg
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             content = []
             for d, r in zip(pdf["doc_id"], pdf["media_ref"]):
-                frames = []
-                for i in range(n_frames):
-                    body = hashlib.sha256(f"{d}/{r}#{i}".encode()).digest()
-                    frames.append(struct.pack("<I", len(body)) + body)
-                content.append(_FRAME_MAGIC + b"".join(frames))
+                frames = [
+                    encode_jpeg(
+                        _synth_pixels(
+                            hashlib.sha256(f"{d}/{r}#{i}".encode()).digest(),
+                            16 * 16,
+                        ).reshape(16, 16)
+                    )
+                    for i in range(n_frames)
+                ]
+                content.append(
+                    write_avi_mjpeg(frames, fps=25.0, width=16, height=16)
+                )
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "media_ref": pdf["media_ref"],
                     "content": content,
-                    "mime": "video/fake",
+                    "mime": "video/avi",
                 }
             )
 
     return refs.mapInPandas(fn, MEDIA_SCHEMA)
 
 
-def sample_frames(
-    video: DataFrame, every_n: int = 8, fps: float = 25.0
-) -> DataFrame:
+def sample_frames(video: DataFrame, every_n: int = 8) -> DataFrame:
     """Frame sampling: one input video row → one output row per kept frame
-    (frame 0, every_n, 2·every_n, …), with the timestamp each frame would
-    carry at the container's frame rate (AVI) or ``fps`` (fallback).
+    (frame 0, every_n, 2·every_n, …), with the timestamp each frame
+    carries at the container's frame rate.
 
-    MJPEG-in-AVI is REAL end to end (r5): the RIFF walk
-    (sources/avi.py — the WAV code's sibling grammar) yields ``00dc``
-    chunks that ARE baseline JPEGs, so sampled frame rows feed
+    MJPEG-in-AVI is REAL end to end: the RIFF walk (sources/avi.py — the
+    WAV code's sibling grammar) yields ``00dc`` chunks that ARE baseline
+    JPEGs, so sampled frame rows feed
     ``extract_media_features``/``media_avg_hash`` with real pixels via
-    sources/jpeg.py.  The legacy length-prefixed ``FVC1`` container walk
-    is also real parsing, with fake frame pixels, for codecs with no
-    in-repo decoder; corrupt/unknown containers skip, like a codec
-    would.  The 1→N row fan-out happens inside the Arrow batch, so a
-    long video never becomes a wide row downstream: frames are
-    independent rows that repartition freely.  Scale shape: narrow map,
-    no shuffle; downstream feature extraction joins by (doc_id,
-    media_ref, frame_no)."""
+    sources/jpeg.py.  Corrupt containers and non-video rows skip, like a
+    codec would; a truncated tail frame is dropped.  The 1→N row fan-out
+    happens inside the Arrow batch, so a long video never becomes a wide
+    row downstream: frames are independent rows that repartition freely.
+    Scale shape: narrow map, no shuffle; downstream feature extraction
+    joins by (doc_id, media_ref, frame_no)."""
     from ocr_spark.sources.avi import is_avi, parse_avi
-
-    ms_per_frame = 1000.0 / fps
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out_d, out_r, out_f, out_t, out_c = [], [], [], [], []
-
-            def keep(doc_id, ref, frame_no, ms, payload):
-                out_d.append(doc_id)
-                out_r.append(ref)
-                out_f.append(frame_no)
-                out_t.append(int(frame_no * ms))
-                out_c.append(payload)
-
             for doc_id, ref, content in zip(
                 pdf["doc_id"], pdf["media_ref"], pdf["content"]
             ):
                 b = bytes(content) if content is not None else b""
-                if is_avi(b):
-                    try:
-                        frames, real_fps = parse_avi(b)
-                    except ValueError:
-                        continue  # corrupt container — skip, degrade
-                    real_ms = 1000.0 / real_fps
-                    for frame_no, payload in enumerate(frames):
-                        if frame_no % every_n == 0:
-                            keep(doc_id, ref, frame_no, real_ms, payload)
-                    continue
-                if not b.startswith(_FRAME_MAGIC):
-                    continue  # not a video container — skip, like a codec would
-                pos, frame_no = len(_FRAME_MAGIC), 0
-                while pos + 4 <= len(b):
-                    (ln,) = struct.unpack_from("<I", b, pos)
-                    pos += 4
-                    if pos + ln > len(b):
-                        break  # truncated tail frame — drop, atomic-write moral
-                    if frame_no % every_n == 0:
-                        keep(doc_id, ref, frame_no, ms_per_frame, b[pos : pos + ln])
-                    pos += ln
-                    frame_no += 1
+                if not is_avi(b):
+                    continue  # not a video container — skip
+                try:
+                    frames, fps = parse_avi(b)
+                except ValueError:
+                    continue  # corrupt container — skip, degrade
+                ms_per_frame = 1000.0 / fps
+                for frame_no in range(0, len(frames), every_n):
+                    out_d.append(doc_id)
+                    out_r.append(ref)
+                    out_f.append(frame_no)
+                    out_t.append(int(frame_no * ms_per_frame))
+                    out_c.append(frames[frame_no])
             yield pd.DataFrame(
                 {
                     "doc_id": out_d,
@@ -396,14 +342,10 @@ AHASH_SCHEMA = (
 
 
 def _fake_grid(content: bytes) -> np.ndarray:
-    """Deterministic NON-PNG stand-in for the 8×8 grayscale resample a
-    real build produces with PIL (`img.convert('L').resize((8, 8))`):
-    64 bytes expanded from the content digest.  Identical bytes →
-    identical grid — the property the average-hash dedup path needs."""
-    if not FAKE_DECODE:
-        raise NotImplementedError(
-            "real media decode requires PIL/ffmpeg, not present in this container"
-        )
+    """Deterministic stand-in for the 8×8 grayscale grid of a payload
+    with no in-repo codec: 64 bytes expanded from the content digest.
+    Identical bytes → identical grid — the property the average-hash
+    dedup path needs."""
     h = hashlib.sha256(content).digest() + hashlib.sha256(
         content + b"\x01"
     ).digest()
@@ -411,13 +353,13 @@ def _fake_grid(content: bytes) -> np.ndarray:
 
 
 def _grid(content: bytes) -> np.ndarray:
-    """The aHash input grid: PNG / baseline JPEG → REAL pixels (decode →
+    """The aHash input grid: PNG / JPEG / GIF / BMP → REAL pixels (decode →
     grayscale → exact 8×8 box means, sources/png.py grid8); formats
     without an in-repo codec → the digest fake.  Real pixels mean
     visually-identical re-encodes (different filter choices, different
     FORMATS — a PNG and a JPEG of the same image) hash identically — the
     property a byte-digest fake cannot provide."""
-    img = _real_image(content)
+    img = sniff_decode(content)
     if img is None:
         return _fake_grid(content)
     return grid8(to_gray(img)).astype(np.int64).flatten()
@@ -444,24 +386,9 @@ def media_avg_hash(media: DataFrame) -> DataFrame:
     feeding ``dedup.hamming_neardup`` (bits=64), the same pair machinery
     the text SimHash uses.  One Arrow-batched narrow pass; binary never
     shuffles (the hash rides the slim columns out)."""
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, ref, content, mime in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"], pdf["mime"]
-            ):
-                b = bytes(content) if content is not None else b""
-                rows.append(
-                    (doc_id, ref, mime, len(b),
-                     average_hash_bits(_grid(b)))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "media_ref", "mime", "n_bytes", "ahash"],
-            )
-
-    return media.mapInPandas(fn, AHASH_SCHEMA)
+    return _map_payloads(
+        media, AHASH_SCHEMA, lambda b: (len(b), average_hash_bits(_grid(b)))
+    )
 
 
 AUDIO_SCHEMA = (
@@ -502,56 +429,36 @@ def extract_audio_features(media: DataFrame, frame: int = 400) -> DataFrame:
     """binary audio content → typed metadata + integer frame-feature
     rollups (Σ|x|, zero crossings, peak) — the VAD/quality triple a
     speech-data pipeline filters on.  WAV content takes the REAL
-    sources/wav.py decode path; non-WAV (mp3/ogg — no sandbox codec)
+    sources/wav.py decode path; non-WAV (mp3/ogg — no in-repo codec)
     degrades to a deterministic digest fake, same dispatch discipline
     as the image kernels.  One narrow Arrow-batched pass; audio bytes
     never shuffle."""
     from ocr_spark.sources.wav import decode_wav, frame_features, is_wav
 
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, ref, content, mime in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"], pdf["mime"]
-            ):
-                b = bytes(content) if content is not None else b""
-                try:
-                    if not is_wav(b):
-                        raise ValueError("not wav")
-                    a, rate = decode_wav(b)
-                    ch = a.shape[1]
-                    ff = frame_features(a, frame=frame)
-                    rows.append(
-                        (
-                            doc_id, ref, mime, len(b), rate, ch,
-                            len(ff),
-                            int(ff[:, 0].sum()) if len(ff) else 0,
-                            int(ff[:, 1].sum()) if len(ff) else 0,
-                            int(ff[:, 2].max()) if len(ff) else 0,
-                        )
-                    )
-                except ValueError:
-                    h = hashlib.sha1(b).digest()
-                    rows.append(
-                        (
-                            doc_id, ref, mime, len(b),
-                            8000 + (h[0] % 5) * 2000, 1 + h[1] % 2,
-                            int.from_bytes(h[2:4], "big"),
-                            int.from_bytes(h[4:8], "big"),
-                            int.from_bytes(h[8:10], "big"),
-                            int.from_bytes(h[10:12], "big") % 32768,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_ref", "mime", "n_bytes",
-                    "sample_rate", "n_channels", "n_frames",
-                    "sum_abs", "zero_crossings", "peak",
-                ],
+    def row(b: bytes) -> tuple:
+        try:
+            if not is_wav(b):
+                raise ValueError("not wav")
+            a, rate = decode_wav(b)
+            ff = frame_features(a, frame=frame)
+            return (
+                len(b), rate, a.shape[1], len(ff),
+                int(ff[:, 0].sum()) if len(ff) else 0,
+                int(ff[:, 1].sum()) if len(ff) else 0,
+                int(ff[:, 2].max()) if len(ff) else 0,
+            )
+        except ValueError:
+            h = hashlib.sha1(b).digest()
+            return (
+                len(b),
+                8000 + (h[0] % 5) * 2000, 1 + h[1] % 2,
+                int.from_bytes(h[2:4], "big"),
+                int.from_bytes(h[4:8], "big"),
+                int.from_bytes(h[8:10], "big"),
+                int.from_bytes(h[10:12], "big") % 32768,
             )
 
-    return media.mapInPandas(fn, AUDIO_SCHEMA)
+    return _map_payloads(media, AUDIO_SCHEMA, row)
 
 
 def caption_pairs(spans: DataFrame, window: int = 8) -> DataFrame:

@@ -6,9 +6,9 @@ walks the same chunk grammar), and MJPEG is the one video codec this
 repo can decode for real because every frame is a baseline JPEG
 (sources/jpeg.py).  That turns the video frame-sampling path
 (operators/multimodal.sample_frames) into real plumbing end to end:
-RIFF walk → ``00dc`` frame chunks → real JPEG bytes → real pixels,
-with the deterministic fake retained only for containers/codecs with
-no in-repo decoder.
+RIFF walk → ``00dc`` frame chunks → real JPEG bytes → real pixels.
+It is the only video container the repo reads or writes
+(``synth_video_for_refs`` emits it too); other containers are skipped.
 
 Scope: the walker collects ``xxdc``/``xxdb`` stream chunks in file
 order (the MJPEG frame sequence; index chunks are ignored — frame

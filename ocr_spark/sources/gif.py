@@ -7,8 +7,9 @@ the FIRST image frame (the still-image case; animation frames carry
 compositing semantics out of scope for feature extraction), global and
 local color tables, the four-pass interlace order, transparent-index
 ignored (rendered as its palette color — deterministic and
-side-channel-free).  Malformed streams raise ValueError; kernels
-degrade via sources/imagecodec.sniff_decode.
+side-channel-free).  Malformed streams, and screens or frames over
+``MAX_PIXELS``, raise ValueError; kernels degrade via
+sources/imagecodec.sniff_decode.
 
 The LZW implementation follows the published GIF89a specification
 (Appendix F): variable code width starting at min_code_size+1, clear
@@ -18,6 +19,13 @@ and end-of-information codes, dictionary grown to 4095 entries.
 from __future__ import annotations
 
 import numpy as np
+
+
+#: pixel cap checked against both the logical screen and the frame
+#: before anything is allocated: header fields are attacker-chosen, and
+#: a ~800-byte file can declare a 65535×65535 screen (12.9 GB as RGB).
+#: 2^24 px is a 4096×4096 screen, 48 MB as RGB.
+MAX_PIXELS = 1 << 24
 
 
 def is_gif(data: bytes) -> bool:
@@ -165,6 +173,8 @@ def decode_gif(data: bytes) -> np.ndarray:
 def _decode(data: bytes) -> np.ndarray:
     sw = data[6] | (data[7] << 8)
     sh = data[8] | (data[9] << 8)
+    if sw * sh > MAX_PIXELS:
+        raise ValueError(f"GIF screen {sw}x{sh} over the pixel cap")
     flags = data[10]
     pos = 13
     gct = None
@@ -202,6 +212,8 @@ def _decode(data: bytes) -> np.ndarray:
             raise ValueError("GIF image with no color table")
         if w == 0 or h == 0:
             raise ValueError("empty GIF frame")
+        if w * h > MAX_PIXELS:
+            raise ValueError(f"GIF frame {w}x{h} over the pixel cap")
         min_code = data[pos]
         pos += 1
         if not 2 <= min_code <= 11:

@@ -23,8 +23,9 @@ def decode_image(data: bytes) -> np.ndarray:
     """Decode PNG/JPEG/GIF/BMP bytes to a uint8 pixel array
     ((H, W[, C]) — PNG may carry alpha; GIF/BMP decode to RGB).  Raises
     ValueError for unsupported formats/variants or corrupt streams
-    (zlib/struct/index errors from crafted truncations are re-raised as
-    ValueError so callers catch one type)."""
+    (zlib/struct/index errors from crafted truncations, and MemoryError
+    from a crafted size field, are re-raised as ValueError so callers
+    catch one type)."""
     import struct
     import zlib
 
@@ -37,7 +38,7 @@ def decode_image(data: bytes) -> np.ndarray:
             return decode_gif(data)
         if is_bmp(data):
             return decode_bmp(data)
-    except (zlib.error, struct.error, IndexError) as e:
+    except (zlib.error, struct.error, IndexError, MemoryError) as e:
         raise ValueError(f"corrupt image stream: {e}") from e
     raise ValueError("no in-repo codec for these bytes")
 

@@ -16,9 +16,10 @@ pure ``struct`` byte arithmetic, no codec:
   positive);
 * WebP  — VP8X canvas, VP8L 14-bit dims, or VP8 key-frame size.
 
-``sniff_dimensions`` is the multimodal kernels' metadata dispatch:
-formats whose PIXELS this engine can't decode in-sandbox (GIF/BMP/WebP
-— JPEG pixels are real since r5, sources/jpeg.py) still report REAL
+``sniff_dimensions`` is the multimodal kernels' geometry fallback:
+PNG/JPEG/GIF/BMP pixels decode for real (sources/imagecodec.py), so it
+matters for WebP — whose pixels have no in-repo codec — and for the
+unsupported variants of the other four.  Those still report REAL
 geometry; only their pixel-derived features fall back to the
 deterministic fake.
 """

@@ -12,7 +12,7 @@ Reference shape (citations into /root/reference/):
 * S4 single image — hard-link as page 0
                                     — server/celery_app.py:654-677
 
-What is REAL here (and tested): the ``spark.read.format("binaryFile")``
+What is here (and tested): the ``spark.read.format("binaryFile")``
 scan, container parsing (ZIP via the stdlib ``zipfile`` on in-memory
 bytes; a length-prefixed ``.pdfx`` page container standing in for the
 PDF page split), the per-source page ordering (O1 numeric for pdf/tiff
@@ -20,12 +20,11 @@ vs O2 casefold for zip — operators/layout.py), the hOCR parse
 (sources/hocr.py) and the span assembly with global reading-order
 offsets.
 
-What is FAKE (documented, sandbox): the raster→hOCR OCR engine.  There
-is no Tesseract in this container, so ``FAKE_OCR`` decodes a page
-payload as the hOCR string itself (the fixture generator embeds real
-hOCR produced by ``render_hocr``).  A real build swaps ``_page_to_hocr``
-for an engine call behind the same (bytes → hOCR str) signature —
-everything before and after it is production-shaped.
+Page payloads are read as hOCR text: the raster→hOCR OCR engine
+(Tesseract in the reference) is not part of this repo, so the fixture
+generator embeds real hOCR produced by ``render_hocr`` and
+``ingest_spans`` UTF-8-decodes each page in Catalyst before the hOCR
+parse.
 
 Scale notes: the scan parallelizes per container file
 (``maxPartitionBytes`` governs split packing; binaryFile never splits a
@@ -51,8 +50,6 @@ from pyspark.sql import functions as F
 
 from ocr_spark.operators.layout import order_pages
 from ocr_spark.sources.hocr import parse_hocr_pages
-
-FAKE_OCR = True  # sandbox: payload bytes ARE the hOCR; see module docstring
 
 PDFX_MAGIC = b"PDFX"
 
@@ -244,6 +241,8 @@ def _split_container(path: str, content: bytes) -> list[tuple[str, str, str, byt
         zlib.error,
         NotImplementedError,  # zipfile: unsupported compression type
         OSError,  # zipfile: CRC / header inconsistencies surface as OSError
+        EOFError,  # zipfile: a member's compressed data cut short
+        RuntimeError,  # zipfile: member flagged encrypted, no password
     ):
         # degrade-to-marker: one corrupt upload must never kill the scan
         # stage (the raster path's 'corrupt' marker-row convention) —
@@ -276,22 +275,13 @@ def scan_containers(spark: SparkSession, path: str) -> DataFrame:
     return raw.mapInArrow(fn, _PAGES_DDL)
 
 
-def _page_to_hocr(page_bytes) -> str:
-    """The OCR engine seam.  FAKE_OCR: identity decode (payload is hOCR)."""
-    if not FAKE_OCR:
-        raise NotImplementedError(
-            "real OCR needs Tesseract, not present in this container"
-        )
-    return bytes(page_bytes).decode("utf-8", errors="replace")
-
-
 def ingest_spans(spark: SparkSession, path: str) -> DataFrame:
     """The full ingest pipeline: containers → ordered pages → hOCR IR →
     (doc_id, offset, kind, text) span rows with global reading-order
     offsets (page-major, then paragraph/line/word — SURVEY.md §2.4)."""
     pages = scan_containers(spark, path)
     ranked = order_pages(pages)  # O1/O2 per source_type, page_rank column
-    # OCR seam: fake identity decode — page payload is already hOCR text
+    # page payloads are hOCR text (module docstring)
     hocr_df = ranked.select(
         "doc_id",
         F.col("page_rank").alias("page_no"),

@@ -3,11 +3,9 @@ most common image format.
 
 The reference keeps single-image uploads and media crops under their
 original extension (server/src/utils/file.py:92-98,
-server/celery_app.py:1070-1081), so a real corpus carries JPEGs whose
-pixels previously came from the deterministic fake
-(operators/multimodal.py ``FAKE_DECODE``).  Header geometry went real in
-round 4 (sources/imagemeta.py); this module closes the pixel seam the
-same way sources/png.py closed PNG's: numpy math + stdlib ``struct``,
+server/celery_app.py:1070-1081), so a real corpus carries JPEGs.  Header
+geometry comes from sources/imagemeta.py; this module decodes the
+pixels the same way sources/png.py decodes PNG's: numpy math + stdlib ``struct``,
 no PIL/cv2, implemented from the public ITU-T T.81 spec (Annex K tables,
 F.16 Huffman decode procedure).
 

@@ -14,10 +14,9 @@ Reference semantics (citations into /root/reference/):
 
 Deviations, all deliberate and documented:
 
-* **No page images.**  Raster decode is the multimodal codec seam
-  (operators/multimodal.py:35 — the sandbox has no codecs); the text
-  layer, geometry and document structure are the analytics semantics
-  and are real.  The reference's reportlab `drawImage` slot is where an
+* **No page images.**  The writer embeds no raster; the text layer,
+  geometry and document structure are the analytics semantics and are
+  real.  The reference's reportlab `drawImage` slot is where an
   image XObject would go.
 * **Courier replaces Times-Roman** for the layer font: the layer is
   invisible (mode 3, same as the reference), so glyph shapes are

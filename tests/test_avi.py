@@ -1,10 +1,9 @@
-"""MJPEG-in-AVI (sources/avi.py + multimodal.sample_frames dispatch):
-real RIFF walk, frames that ARE baseline JPEGs, real pixels through the
-downstream feature kernels, and the degrade contract on fuzzed files."""
+"""MJPEG-in-AVI (sources/avi.py + multimodal.sample_frames): real RIFF
+walk, frames that ARE baseline JPEGs, real pixels through the downstream
+feature kernels, and the tail-drop / bad-signature contract (bit-flip
+fuzz: tests/test_fuzz_sources.py)."""
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 import pytest
@@ -40,21 +39,14 @@ def test_odd_length_frames_word_aligned():
     assert got == frames
 
 
-def test_truncated_tail_dropped_and_fuzz_valueerror_only():
+def test_truncated_tail_dropped_and_bad_signature_raises():
+    """Bit-flip fuzz of the walker lives in tests/test_fuzz_sources.py."""
     frames = [encode_jpeg(_block_img(i)) for i in range(3)]
     data = write_avi_mjpeg(frames, fps=25.0)
     # truncation mid-last-frame drops only the tail
     cut = data[: len(data) - len(frames[2]) // 2]
     got, _ = parse_avi(cut)
     assert got == frames[:2]
-    for i in range(0, len(data), 11):
-        fuzz = bytearray(data)
-        fuzz[i] ^= 0xA5
-        try:
-            fr, fps = parse_avi(bytes(fuzz))
-            assert isinstance(fr, list) and fps > 0
-        except ValueError:
-            pass
     with pytest.raises(ValueError):
         parse_avi(b"RIFFxxxxWAVE")
 
@@ -105,14 +97,3 @@ def test_sample_frames_avi_real_pixels_e2e(spark):
     assert len(feats) == 3
     assert all((r["width"], r["height"]) == (24, 16) for r in feats)
 
-
-def test_fvc1_legacy_container_still_walks(spark):
-    from ocr_spark.operators.multimodal import sample_frames, synth_video_for_refs
-
-    refs = spark.createDataFrame(
-        [("d1", "v.fvc")], "doc_id string, media_ref string"
-    )
-    frames = sample_frames(
-        synth_video_for_refs(refs, n_frames=10), every_n=5
-    ).collect()
-    assert sorted(r["frame_no"] for r in frames) == [0, 5]

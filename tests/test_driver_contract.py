@@ -86,6 +86,18 @@ def test_query_matches_oracle(spark, ddb, name):
         raise AssertionError(f"{name} mismatch:\n{diff}\n{e}") from None
 
 
+@pytest.mark.parametrize(
+    "name, flag", [("gif_roundtrip", "interlaced"), ("bmp_roundtrip", "top_down")]
+)
+def test_roundtrip_gate_flag_takes_both_values(ddb, name, flag):
+    """The gate's codec flag (GIF interlace, BMP row order) must vary over
+    the sampled docs, or one codec branch never runs under the gate."""
+    got = ddb.sql(
+        f"select distinct {flag} from ({entry_mod.oracle_sql()[name]})"
+    ).fetchall()
+    assert {v for (v,) in got} == {True, False}
+
+
 @pytest.mark.parametrize("name", NO_ORACLE)
 def test_query_runs_without_oracle(spark, name):
     df = entry_mod.queries()[name](spark, SF_DIR)

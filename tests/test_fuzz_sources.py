@@ -1,8 +1,9 @@
 """Degrade-to-marker fuzz battery (r4 verdict item 2): seeded bit-flip
-and truncation fuzz across every binary source — PNG, JPEG, WAV, TIFF,
-ZIP, pdfx — proving no kernel-level job failure: the parse layer either
-succeeds, raises the one documented ValueError (caught by every
-kernel), or degrades to the marker-row convention.  One Spark e2e per
+and truncation fuzz across every binary source — PNG, JPEG, GIF, BMP,
+WAV, AVI, TIFF, ZIP, pdfx — plus a GIF size bomb, proving no
+kernel-level job failure: the parse layer either succeeds, raises the
+one documented ValueError (caught by every kernel), or degrades to the
+marker-row convention.  One Spark e2e per
 surface confirms corrupt payloads flow through as marker rows."""
 
 from __future__ import annotations
@@ -14,6 +15,9 @@ import zipfile
 import numpy as np
 import pytest
 
+from ocr_spark.sources.avi import parse_avi, write_avi_mjpeg
+from ocr_spark.sources.bmp import encode_bmp
+from ocr_spark.sources.gif import decode_gif, encode_gif
 from ocr_spark.sources.imagecodec import sniff_decode
 from ocr_spark.sources.ingest import _split_container, _tiff_frames
 from ocr_spark.sources.jpeg import encode_jpeg
@@ -73,10 +77,63 @@ def _fuzz_variants(data: bytes, n_flips: int = 40, n_cuts: int = 20):
 
 def test_fuzz_image_codecs_never_raise_through_sniff():
     gray = rng.integers(0, 256, (24, 40), dtype=np.uint8)
-    for base in (encode_png(gray), encode_jpeg(gray)):
-        for v in _fuzz_variants(base):
+    small = gray[:16, :20]
+    bases = (
+        encode_png(gray),
+        encode_jpeg(gray),
+        encode_gif(small),
+        encode_bmp(np.stack([small] * 3, -1)),
+    )
+    for base in bases:
+        # at least one flip per 17 bytes and one cut per 23
+        n_flips = max(40, len(base) // 17 + 1)
+        n_cuts = max(20, len(base) // 23 + 1)
+        for v in _fuzz_variants(base, n_flips=n_flips, n_cuts=n_cuts):
             out = sniff_decode(v)  # contract: None or pixels, never a raise
             assert out is None or isinstance(out, np.ndarray)
+
+
+def test_gif_size_bomb_rejected_before_allocation():
+    """An ~800-byte GIF declaring a 20000×20000 screen (1.2 GB as RGB)
+    degrades to None without allocating it; an oversized frame
+    descriptor is refused the same way."""
+    import tracemalloc
+
+    base = encode_gif(rng.integers(0, 256, (4, 4), dtype=np.uint8))
+    bomb = bytearray(base)
+    bomb[6:10] = struct.pack("<HH", 20000, 20000)  # logical screen
+    assert 700 < len(bomb) < 900
+    tracemalloc.start()
+    try:
+        out = sniff_decode(bytes(bomb))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert out is None
+    assert peak < 64 << 20
+    frame = bytearray(base)
+    desc = 13 + 3 * 256  # header + 256-entry global color table
+    assert frame[desc] == 0x2C
+    frame[desc + 5 : desc + 9] = struct.pack("<HH", 20000, 20000)
+    with pytest.raises(ValueError, match="pixel cap"):
+        decode_gif(bytes(frame))
+    with pytest.raises(ValueError, match="pixel cap"):
+        decode_gif(bytes(bomb))
+
+
+def test_fuzz_avi_valueerror_only():
+    frames = [
+        encode_jpeg(rng.integers(0, 256, (16, 24), dtype=np.uint8))
+        for _ in range(3)
+    ]
+    base = write_avi_mjpeg(frames, fps=25.0)
+    # at least one flip per 11 bytes
+    for v in _fuzz_variants(base, n_flips=len(base) // 11 + 1):
+        try:
+            got, fps = parse_avi(v)
+            assert isinstance(got, list) and fps > 0
+        except ValueError:
+            pass  # the documented failure type; sample_frames skips it
 
 
 def test_fuzz_wav_valueerror_only():
@@ -114,6 +171,16 @@ def test_fuzz_containers_degrade_to_marker_rows():
                 assert rows[0][3] == b""
         if name != "d.png":  # single-image path never degrades (no parse)
             assert saw_corrupt, (name, "fuzz never hit the marker path")
+    # zipfile raises EOFError when a local header's extra field runs past
+    # the data, RuntimeError when a member is flagged encrypted
+    eof = bytearray(bases["d.zip"])
+    eof[28] ^= 0xFF
+    enc = bytearray(bases["d.zip"])
+    enc[enc.index(b"PK\x01\x02") + 8] ^= 1
+    for v in (eof, enc):
+        assert _split_container("/up/d.zip", bytes(v)) == [
+            ("d.zip", "corrupt", "d.zip", b"")
+        ]
 
 
 def test_fuzz_tiff_walker_valueerror_keyerror_only():

@@ -165,17 +165,58 @@ def test_ahash_invariant_across_reencodes():
 
 
 def test_decode_dispatch_fallback():
-    """Non-PNG and corrupt-PNG bytes take the deterministic fake path
+    """Non-image and corrupt-PNG bytes take the deterministic fake path
     (degrade, never raise inside a kernel)."""
     from ocr_spark.operators.multimodal import _decode, _fake_decode
 
     raw = b"not an image at all"
-    got, want = _decode(raw), _fake_decode(raw)
-    assert got[:2] == want[:2] and (got[2] == want[2]).all()
+    assert _decode(raw) == (None, *_fake_decode(raw)[:2])
     corrupt = bytearray(encode_png(rng.integers(0, 256, (8, 8), dtype=np.uint8)))
     corrupt[20] ^= 0xFF
-    w, h, feat = _decode(bytes(corrupt))
-    assert len(feat) == 8  # fake fallback produced a well-formed result
+    img, w, h = _decode(bytes(corrupt))
+    assert img is None and w > 0 and h > 0  # well-formed fallback
+    x = rng.integers(0, 256, (5, 7), dtype=np.uint8)
+    img, w, h = _decode(encode_png(x))
+    assert (w, h) == (7, 5) and (img == x).all()  # real pixels first
+
+
+def test_image_kernels_sniff_each_payload_once(monkeypatch):
+    """Every image kernel runs the codec dispatch once per payload —
+    decodable, corrupt, codec-less and empty payloads alike."""
+    import pandas as pd
+
+    from ocr_spark.operators import multimodal as MM
+
+    calls = []
+    real = MM.sniff_decode
+    monkeypatch.setattr(MM, "sniff_decode", lambda b: calls.append(b) or real(b))
+
+    class InProcess:  # runs a mapInPandas kernel here, on one batch
+        def __init__(self, pdf):
+            self.pdf = pdf
+
+        def mapInPandas(self, fn, schema):
+            return pd.concat(list(fn(iter([self.pdf]))))
+
+    corrupt = bytearray(encode_png(rng.integers(0, 256, (8, 8), dtype=np.uint8)))
+    corrupt[20] ^= 0xFF
+    payloads = [
+        encode_png(rng.integers(0, 256, (9, 6), dtype=np.uint8)),
+        bytes(corrupt),
+        b"GIF89a" + b"\x00" * 20,  # header geometry 0×0
+        b"no codec",
+        None,
+    ]
+    media = InProcess(pd.DataFrame({
+        "doc_id": "d1",
+        "media_ref": [f"r{i}" for i in range(len(payloads))],
+        "content": payloads,
+        "mime": "image/png",
+    }))
+    for kernel in (MM.extract_media_features, MM.resize_media, MM.media_avg_hash):
+        calls.clear()
+        assert len(kernel(media)) == len(payloads)
+        assert len(calls) == len(payloads), kernel.__name__
 
 
 def test_media_features_real_dims(spark):

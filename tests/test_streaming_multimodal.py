@@ -4,7 +4,8 @@ Streaming: the foreachBatch extraction stream must produce exactly the
 batch kernel's output (one engine, two drivers); the watermarked windowed
 agg must run as a real streaming query.
 Multimodal: binary columns flow through Arrow batches with typed metadata;
-the decode step is the documented deterministic fake.
+the synthesized PNG images and MJPEG-in-AVI video frames decode to real
+pixels.
 """
 
 from __future__ import annotations
@@ -344,32 +345,34 @@ def test_resize_media_geometry(spark):
 
 
 def test_sample_frames_container_walk(spark):
-    """Real container parsing over the fake frame blocks: every_n stride,
-    fps timestamps, truncated tails dropped, non-video rows skipped."""
+    """AVI container walk over synthesized MJPEG videos: every_n stride,
+    container-rate timestamps, real JPEG frames, truncated tails dropped,
+    non-video rows skipped."""
     from ocr_spark.operators.multimodal import (
         sample_frames,
         synth_video_for_refs,
-        _FRAME_MAGIC,
     )
+    from ocr_spark.sources.jpeg import decode_jpeg
     import pandas as pd
 
     refs = spark.createDataFrame(
         [("d1", "v1"), ("d2", "v2")], "doc_id string, media_ref string"
     )
     video = synth_video_for_refs(refs, n_frames=24)
-    out = sample_frames(video, every_n=8, fps=25.0).collect()
-    # 24 frames, stride 8 → frames 0, 8, 16 per video
+    out = sample_frames(video, every_n=8).collect()
+    # 24 frames at 25 fps, stride 8 → frames 0, 8, 16 per video
     got = sorted((r["doc_id"], r["frame_no"], r["ts_ms"]) for r in out)
     assert got == [
         ("d1", 0, 0), ("d1", 8, 320), ("d1", 16, 640),
         ("d2", 0, 0), ("d2", 8, 320), ("d2", 16, 640),
     ]
-    # frame bytes are the container's (deterministic by doc/ref/frame_no)
-    assert all(len(bytes(r["content"])) == 32 for r in out)
+    # frames are real 16×16 JPEGs, distinct per (doc, ref, frame_no)
+    assert all(decode_jpeg(bytes(r["content"])).shape == (16, 16) for r in out)
+    assert len({bytes(r["content"]) for r in out}) == 6
     # truncated container: tail frame dropped, earlier frames intact
     full = bytes(video.where("doc_id='d1'").first()["content"])
     rows = [
-        ("d1", "trunc", full[:-10], "video/fake"),
+        ("d1", "trunc", full[:-10], "video/avi"),
         ("d3", "notvideo", b"\x89PNGxxxx", "image/png"),
     ]
     df = spark.createDataFrame(

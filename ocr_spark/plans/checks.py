@@ -53,9 +53,16 @@ def pushed_filters(df: DataFrame) -> str:
 
 
 def read_schema(df: DataFrame) -> str:
-    """The ReadSchema section of the scan node(s) — column-pruning witness."""
+    """The full read schema of each file scan — column-pruning witness.
+    Taken from the scan nodes themselves: the plan string cuts ReadSchema
+    at ``spark.sql.maxMetadataStringLength`` (100 chars by default), which
+    would hide a column that was not pruned."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = (leaves.apply(i) for i in range(leaves.size()))
     return "\n".join(
-        line for line in physical_plan(df).splitlines() if "ReadSchema" in line
+        s.requiredSchema().catalogString()
+        for s in scans
+        if s.getClass().getSimpleName() == "FileSourceScanExec"
     )
 
 

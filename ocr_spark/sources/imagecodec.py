@@ -6,7 +6,9 @@ sources/bmp.py).
 One choke point for the multimodal/raster kernels, so adding a codec
 (as the JPEG round did after PNG, and GIF/BMP after that) upgrades
 every pixel consumer at once — features, resize, perceptual hash,
-raster segmentation.
+raster segmentation.  It is also the one pixel-budget check: a header
+declaring more than ``MAX_PIXELS`` is refused before any codec sizes a
+buffer from it.
 """
 
 from __future__ import annotations
@@ -14,7 +16,8 @@ from __future__ import annotations
 import numpy as np
 
 from ocr_spark.sources.bmp import decode_bmp, is_bmp
-from ocr_spark.sources.gif import decode_gif, is_gif
+from ocr_spark.sources.gif import MAX_PIXELS, decode_gif, is_gif
+from ocr_spark.sources.imagemeta import sniff_dimensions
 from ocr_spark.sources.jpeg import decode_jpeg, is_jpeg
 from ocr_spark.sources.png import decode_png, is_png
 
@@ -25,10 +28,16 @@ def decode_image(data: bytes) -> np.ndarray:
     ValueError for unsupported formats/variants or corrupt streams
     (zlib/struct/index errors from crafted truncations, and MemoryError
     from a crafted size field, are re-raised as ValueError so callers
-    catch one type)."""
+    catch one type).  A header declaring more than ``MAX_PIXELS`` raises
+    ValueError before any codec allocates: header fields are
+    attacker-chosen, and the codecs size their planes from them."""
     import struct
     import zlib
 
+    dims = sniff_dimensions(data)
+    if dims is not None and dims[1] * dims[2] > MAX_PIXELS:
+        fmt, w, h = dims
+        raise ValueError(f"{fmt} declares {w}x{h} px, over the pixel cap")
     try:
         if is_png(data):
             return decode_png(data)

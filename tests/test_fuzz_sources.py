@@ -1,6 +1,6 @@
 """Degrade-to-marker fuzz battery (r4 verdict item 2): seeded bit-flip
 and truncation fuzz across every binary source — PNG, JPEG, GIF, BMP,
-WAV, AVI, TIFF, ZIP, pdfx — plus a GIF size bomb, proving no
+WAV, AVI, TIFF, ZIP, pdfx — plus GIF, JPEG, PNG and BMP size bombs, proving no
 kernel-level job failure: the parse layer either succeeds, raises the
 one documented ValueError (caught by every kernel), or degrades to the
 marker-row convention.  One Spark e2e per
@@ -11,6 +11,7 @@ from __future__ import annotations
 import io
 import struct
 import zipfile
+import zlib
 
 import numpy as np
 import pytest
@@ -119,6 +120,46 @@ def test_gif_size_bomb_rejected_before_allocation():
         decode_gif(bytes(frame))
     with pytest.raises(ValueError, match="pixel cap"):
         decode_gif(bytes(bomb))
+
+
+def _jpeg_bomb(base: bytes) -> bytes:
+    sof = base.index(b"\xff\xc0")  # baseline SOF0: length, precision, h, w
+    return base[: sof + 5] + struct.pack(">HH", 20000, 20000) + base[sof + 9:]
+
+
+def _png_bomb(base: bytes) -> bytes:
+    ihdr = bytearray(base[12:29])  # b"IHDR" + 13 data bytes
+    ihdr[4:12] = struct.pack(">II", 20000, 20000)
+    crc = struct.pack(">I", zlib.crc32(bytes(ihdr)))
+    return base[:12] + bytes(ihdr) + crc + base[33:]
+
+
+def _bmp_bomb(base: bytes) -> bytes:
+    return base[:18] + struct.pack("<ii", 20000, -20000) + base[26:]
+
+
+@pytest.mark.parametrize("encode,patch", [
+    (encode_jpeg, _jpeg_bomb),
+    (encode_png, _png_bomb),
+    (lambda g: encode_bmp(np.stack([g] * 3, -1)), _bmp_bomb),
+], ids=["jpeg", "png", "bmp"])
+def test_image_size_bomb_rejected_before_allocation(encode, patch):
+    """A small valid image whose header is patched to declare 20000×20000
+    (400 Mpx) degrades to None before any codec sizes a buffer from it."""
+    import tracemalloc
+
+    from ocr_spark.sources.imagemeta import sniff_dimensions
+
+    bomb = patch(encode(rng.integers(0, 256, (8, 8), dtype=np.uint8)))
+    assert sniff_dimensions(bomb)[1:] == (20000, 20000)
+    tracemalloc.start()
+    try:
+        out = sniff_decode(bomb)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert out is None
+    assert peak < 64 << 20
 
 
 def test_fuzz_avi_valueerror_only():

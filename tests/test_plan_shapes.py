@@ -39,16 +39,16 @@ def test_extraction_is_shuffle_free(spark, contract_path):
 
 
 def test_extraction_prunes_box_before_python(spark, contract_path):
-    """meta.box must be dropped before the Python exchange: it may appear in
-    the scan (parquet struct pruning is limited) but nowhere above it."""
-    out = extract_documents(spark.read.parquet(contract_path))
-    plan = checks.physical_plan(out)
-    assert "MapInArrow" in plan
-    for line in plan.splitlines():
-        if "box" in line:
-            assert any(k in line for k in ("FileScan", "Relation", "ReadSchema")), (
-                f"meta.box leaked above the scan:\n{line}"
-            )
+    """The scan reads only the meta fields the kernel uses: never meta.box,
+    and meta.confidence only when the confidence filter is on."""
+    docs = spark.read.parquet(contract_path)
+    out = extract_documents(docs)
+    assert "MapInArrow" in checks.physical_plan(out)
+    rs = checks.read_schema(out)
+    assert "meta:array<struct<page_no:int" in rs, rs
+    assert "box" not in rs and "confidence" not in rs, rs
+    rs = checks.read_schema(extract_documents(docs, conf_min=75))
+    assert "confidence:int" in rs and "box" not in rs, rs
 
 
 def test_dim_joins_broadcast(spark):

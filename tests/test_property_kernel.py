@@ -18,7 +18,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocr_spark import oracle
-from ocr_spark.operators.extract import _extract_batch
+from ocr_spark.operators.extract import _extract_batch, _order_words
 
 WORDS = ["ba", "c", "díx", "e«f»", "g h", " ", "", "Zu", "ação!", "k,",
          # exotic whitespace inside a span locks the Arrow-vs-Python
@@ -41,8 +41,11 @@ span_st = st.fixed_dictionaries(
 doc_st = st.lists(span_st, min_size=0, max_size=40)
 
 
-def _build_batch(docs: list[list[dict]]) -> tuple[pa.RecordBatch, list[dict]]:
-    """docs (list of span-dicts lists) → (arrow batch, oracle doc dicts)."""
+def _build_batch(
+    docs: list[list[dict]], offset_step: int = 1
+) -> tuple[pa.RecordBatch, list[dict]]:
+    """docs (list of span-dicts lists) → (arrow batch, oracle doc dicts).
+    Offsets are reading-order ranks times ``offset_step``."""
     span_t = pa.struct(
         [("kind", pa.string()), ("text", pa.string()),
          ("media_ref", pa.string()), ("offset", pa.int32())]
@@ -82,7 +85,7 @@ def _build_batch(docs: list[list[dict]]) -> tuple[pa.RecordBatch, list[dict]]:
                         if s["kind"] == "media_ref"
                         else None
                     ),
-                    "offset": int(offset_of[j]),
+                    "offset": int(offset_of[j]) * offset_step,
                 }
             )
             metas.append(
@@ -219,3 +222,97 @@ def test_dehyphenation_property(docs):
             (w["word"], w["cnt"], w["pages"]) for w in got["word_index"]
         ] == [(w["word"], w["cnt"], w["pages"]) for w in exp_ix]
         assert got["doc_text"] == oracle.doc_text_expected(doc, order_by="meta")
+
+
+# ---------------------------------------------------------------------------
+# reading order: the packed int64 words sort exactly as the seven keys
+# ---------------------------------------------------------------------------
+
+I32 = (-(2**31), 2**31 - 1)
+key_value_st = st.one_of(
+    st.integers(-1, 3), st.sampled_from(I32), st.integers(*I32)
+)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(0, 30).flatmap(
+    lambda n: st.lists(st.lists(key_value_st, min_size=n, max_size=n),
+                       min_size=7, max_size=7)))
+def test_packed_order_equals_lexsort(cols):
+    """-1 sentinels, int32 extremes, ties, a single span and an empty
+    batch: the packed words give the 7-key stable lexsort order."""
+    keys = [np.array(c, dtype=np.int32) for c in cols]
+    words = _order_words(keys)
+    assert words and all(w.dtype == np.int64 for w in words)
+    assert np.array_equal(np.lexsort(words[::-1]), np.lexsort(keys[::-1]))
+
+
+def test_packed_order_spills_into_more_words():
+    keys = [np.array([I32[0], -1, I32[1], 0], dtype=np.int32)] * 7
+    words = _order_words(keys)
+    assert len(words) == 7  # 32 bits per key: no two share a word
+    assert np.array_equal(np.lexsort(words[::-1]), np.lexsort(keys[::-1]))
+    assert len(_order_words([np.zeros(5, np.int64)] * 3)) == 1
+
+
+wide_span_st = st.fixed_dictionaries(
+    {
+        "kind": st.sampled_from(["text", "media_ref", "boilerplate", "ocr_image"]),
+        "word": st.sampled_from(WORDS),
+        "page_no": st.sampled_from([1, 2, 700, 2999]),
+        "segment_pos": st.integers(0, 1000),
+        "para_pos": st.sampled_from([-1, 0, 1, 1000]),
+        "line_pos": st.sampled_from([-1, 0, 999]),
+        "word_pos": st.integers(-1, 1000),
+        "confidence": st.integers(0, 100),
+    }
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.lists(wide_span_st, min_size=0, max_size=30),
+                min_size=1, max_size=4),
+       st.sampled_from(["offset", "meta"]))
+def test_wide_key_ranges_equal_oracle(docs, order_by):
+    """Pages up to 2999 and offsets up to ~2^30 need more than one packed
+    word; spans still come out in the oracle's order."""
+    batch, py_docs = _build_batch(docs, offset_step=1 << 25)
+    out = _rows(_extract_batch(batch, order_by, None, False))
+    for doc in py_docs:
+        exp = oracle.extract_expected(doc, order_by=order_by)
+        assert [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in out[doc["doc_id"]]["spans"]
+        ] == [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in exp]
+
+
+def _line_words(*lines: list[str]) -> list[dict]:
+    """One page/segment/paragraph; one list of text words per line."""
+    return [
+        {"kind": "text", "word": w, "page_no": 1, "segment_pos": 0,
+         "para_pos": 0, "line_pos": li, "word_pos": wi, "confidence": 90}
+        for li, words in enumerate(lines) for wi, w in enumerate(words)
+    ]
+
+
+def _index(doc: list[dict]) -> list[tuple]:
+    batch, py_docs = _build_batch([doc])
+    got = _extract_batch(batch, "meta", None, True).to_pylist()[0]
+    exp = oracle.word_index_expected(py_docs[0], order_by="meta")
+    assert got["word_index"] == exp
+    return [(w["word"], w["cnt"]) for w in got["word_index"]]
+
+
+def test_word_order_key_doubles_the_word():
+    """Sort key lower(w)+w: 'staro' sorts AFTER 'staroqui'."""
+    assert _index(_line_words(["staro", "staroqui", "b"])) == [
+        ("b", 1), ("staroqui", 1), ("staro", 1)]
+
+
+def test_hyphen_prefix_decrement_uses_raw_key():
+    """The merged prefix is decremented by its RAW text: 'zu-' is a
+    normalized key and leaves the index, 'Zu-' is not and survives."""
+    assert _index(_line_words(["a", "zu-"], ["lu"])) == [
+        ("a", 1), ("zulu", 1)]
+    assert _index(_line_words(["a", "Zu-"], ["lu"])) == [
+        ("a", 1), ("zu-", 1), ("zulu", 1)]

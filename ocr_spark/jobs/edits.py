@@ -26,9 +26,11 @@ Granularity note: re-deriving a bucket re-runs its unedited co-resident
 docs too — that is the checkpoint granularity trade (buckets are the
 commit unit, exactly like extract_job's resume).  At 4096 buckets an
 edit batch touching k docs recomputes ≤ k/4096 of the corpus.  Touched
-buckets are processed in waves of ``wave_size`` (measured: a 100-doc
-edit over a 400k-doc/64-bucket table touches ~all buckets and OOM'd the
-single-wave form; 16-bucket waves run it comfortably).
+buckets go through extract_job's own wave loop (``rewrite_buckets``,
+per-wave ``status='edited'`` commits; a bucket whose docs are all
+deleted loses its directory) in waves of ``wave_size`` (measured: a
+100-doc edit over a 400k-doc/64-bucket table touches ~all buckets and
+OOM'd the single-wave form; 16-bucket waves run it comfortably).
 
 Module map (the Iceberg mapping of each piece, parquet-seam degraded):
 
@@ -51,15 +53,14 @@ from pyspark.sql import functions as F
 
 from ocr_spark.jobs.extract_job import (
     bucketed,
-    commit_manifest,
+    derived_rows,
     edits_overlay_path,
     hadoop_fs,
     normalize_overlay,
     overlay_data_files,
     overlay_merge,
-    read_documents,
+    rewrite_buckets,
 )
-from ocr_spark.operators.extract import extract_documents
 
 
 def _next_edit_seq(spark: SparkSession, input_path: str) -> int:
@@ -163,7 +164,6 @@ def apply_edits(
     ``updates``: replacement rows ``(doc_id, spans, meta)`` — the edited
     nested content.  Returns stats including the touched bucket list.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     up = bucketed(updates, n_buckets)
     touched = sorted(
         r["bucket"] for r in up.select("bucket").distinct().collect()
@@ -177,28 +177,16 @@ def apply_edits(
     append_edits(updates, input_path)
 
     # 2. re-derive the touched buckets from the merged view, in waves
-    t0 = time.perf_counter()
-    src = bucketed(read_documents(spark, input_path), n_buckets)
-    for i in range(0, len(touched), wave_size):
-        wave = touched[i : i + wave_size]
-        part = src.where(F.col("bucket").isin(wave)).select(
-            "doc_id", "spans", "meta"
-        )
-        out = bucketed(extract_documents(part, order_by=order_by), n_buckets)
-        # dynamic overwrite rewrites exactly the partition dirs present
-        # in `out` = this wave's buckets; all other buckets' files stay
-        out.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
-    wall_ms = int((time.perf_counter() - t0) * 1000)
-
-    commit_manifest(
-        spark, output_path, manifest_path, run_id, touched, wall_ms, "edited"
+    done = rewrite_buckets(
+        spark, derived_rows(spark, input_path, n_buckets, order_by),
+        touched, output_path, manifest_path, run_id, "edited", wave_size,
     )
     n_edited = updates.select("doc_id").distinct().count()
     return {
         "status": "ok",
         "edited_docs": n_edited,
         "touched_buckets": touched,
-        "wall_ms": wall_ms,
+        "wall_ms": done["wall_ms"],
     }
 
 

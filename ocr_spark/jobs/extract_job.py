@@ -15,13 +15,19 @@ completion-gate machinery (SURVEY.md §4 X6/X7):
 
 Crash-safety / exactly-once without Iceberg (the storage seam, SURVEY.md
 §7.1 — no Iceberg jar in this sandbox, parquet + manifest table is the
-degraded mode with the same commit protocol):
+degraded mode with the same commit protocol).  Every job that rewrites
+the ``bucket=`` table goes through :func:`rewrite_buckets`, per wave:
 
-* output is written ``partitionBy(bucket)`` with **dynamic partition
-  overwrite**, so re-processing a bucket atomically replaces exactly that
-  bucket's directory — a bucket that crashed mid-write is simply rewritten
-  on resume, never duplicated.
-* the manifest row is appended only *after* the bucket data is fully
+* the wave is written ``partitionBy(bucket)`` as a **dynamic partition
+  overwrite** — an option of that write, never a session setting that
+  would leak into the caller's later overwrites — so re-processing a
+  bucket atomically replaces exactly that bucket's directory, never
+  duplicates it.
+* dynamic overwrite keeps partitions the new rows lack, so the directory
+  of a wave bucket the write left empty (all docs deleted or expired) is
+  deleted; an ``Observation`` on the write names the buckets it produced,
+  at no extra Spark job.
+* the manifest rows are appended only *after* the wave's data is fully
   written; the manifest is therefore the commit point (a bucket with data
   but no manifest row is considered incomplete and redone — at most ~1/Nth
   of the table).
@@ -35,8 +41,9 @@ celery_app.py:1170-1180).
 from __future__ import annotations
 
 import time
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.extract import extract_documents
@@ -202,7 +209,7 @@ def commit_manifest(
 ) -> list:
     """THE shared manifest-commit protocol: compute per-bucket stats from
     the output table and append one row per bucket (MANIFEST_SCHEMA).
-    Every job that rewrites buckets (extract / edits / retention) commits
+    rewrite_buckets commits every wave of every job that rewrites buckets
     through here so the manifest schema cannot silently fork between job
     types.  Returns the collected per-bucket stat rows."""
     stats = (
@@ -239,10 +246,14 @@ def commit_manifest(
 
 
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
-    try:
-        return spark.read.parquet(manifest_path)
-    except Exception:
+    """The committed manifest rows; empty only when none exist — never by
+    swallowing read errors, which would silently redo every bucket."""
+    _, fs, p = hadoop_fs(spark, manifest_path)
+    if not fs.exists(p):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    # the fixed schema also reads a manifest whose first append crashed
+    # (only ``_temporary`` inside) as empty, where inference would fail
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
 def completed_buckets(spark: SparkSession, manifest_path: str) -> list[int]:
@@ -251,6 +262,66 @@ def completed_buckets(spark: SparkSession, manifest_path: str) -> list[int]:
         r["bucket"]
         for r in m.where(F.col("status") == "ok").select("bucket").distinct().collect()
     ]
+
+
+def rewrite_buckets(
+    spark: SparkSession,
+    rows_for: Callable[[list[int]], DataFrame],
+    buckets: list[int],
+    output_path: str,
+    manifest_path: str,
+    run_id: str,
+    status: str,
+    wave_size: int | None,
+) -> dict:
+    """THE bucket-rewrite protocol (module docstring) over ``buckets``
+    in waves of ``wave_size`` (``None`` → one wave).  ``rows_for(wave)``
+    returns the new rows, ``bucket`` included, of exactly those buckets.
+    Returns the committed doc/span/word totals and summed ``wall_ms``."""
+    _, fs, root = hadoop_fs(spark, output_path)
+    step = wave_size or max(len(buckets), 1)
+    totals = {"doc_count": 0, "span_count": 0, "word_count": 0, "wall_ms": 0}
+    for i in range(0, len(buckets), step):
+        wave = buckets[i : i + step]
+        t0 = time.perf_counter()
+        seen = Observation()
+        (
+            rows_for(wave)
+            .observe(seen, F.collect_set("bucket").alias("buckets"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(output_path)
+        )
+        for b in set(wave) - set(seen.get["buckets"]):
+            fs.delete(root.suffix(f"/bucket={b}"), True)
+        wall_ms = int((time.perf_counter() - t0) * 1000)
+        totals["wall_ms"] += wall_ms
+        for r in commit_manifest(
+            spark, output_path, manifest_path, run_id, wave, wall_ms, status
+        ):
+            for k in ("doc_count", "span_count", "word_count"):
+                totals[k] += r[k] or 0
+    return totals
+
+
+def derived_rows(
+    spark: SparkSession, input_path: str, n_buckets: int, order_by: str
+) -> Callable[[list[int]], DataFrame]:
+    """``rows_for`` of run_extraction and apply_edits: the wave's source
+    documents (read_documents, overlay snapshotted once) → the kernel."""
+    src = bucketed(read_documents(spark, input_path), n_buckets)
+
+    def rows_for(wave: list[int]) -> DataFrame:
+        part = src.where(F.col("bucket").isin(wave))
+        # bucket re-derives from doc_id after the kernel (cheap hash) rather
+        # than being threaded through the Arrow schema or joined back.
+        out = extract_documents(
+            part.select("doc_id", "spans", "meta"), order_by=order_by
+        )
+        return bucketed(out, n_buckets)
+
+    return rows_for
 
 
 def run_extraction(
@@ -277,42 +348,18 @@ def run_extraction(
 
     ``fail_after_waves`` is a test hook simulating a mid-run crash.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     done = set(completed_buckets(spark, manifest_path))
     todo = [b for b in range(n_buckets) if b not in done]
-    if wave_size is None:
-        wave_size = max(len(todo), 1)
-
-    src = bucketed(read_documents(spark, input_path), n_buckets)
-    waves = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
-    processed = 0
-    totals = {"doc_count": 0, "span_count": 0, "word_count": 0}
-    for w, wave in enumerate(waves):
-        if fail_after_waves is not None and w >= fail_after_waves:
-            return {"status": "crashed", "processed": processed, **totals}
-        t0 = time.perf_counter()
-        part = src.where(F.col("bucket").isin(wave))
-        # bucket re-derives from doc_id after the kernel (cheap hash) rather
-        # than being threaded through the Arrow schema or joined back.
-        out = bucketed(
-            extract_documents(
-                part.select("doc_id", "spans", "meta"), order_by=order_by
-            ),
-            n_buckets,
-        )
-        out.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        stats = commit_manifest(
-            spark, output_path, manifest_path, run_id, wave, wall_ms, "ok"
-        )
-        processed += len(wave)
-        for r in stats:
-            totals["doc_count"] += r["doc_count"] or 0
-            totals["span_count"] += r["span_count"] or 0
-            totals["word_count"] += r["word_count"] or 0
+    run = todo
+    if fail_after_waves is not None:
+        run = todo[: fail_after_waves * (wave_size or len(todo))]
+    totals = rewrite_buckets(
+        spark, derived_rows(spark, input_path, n_buckets, order_by), run,
+        output_path, manifest_path, run_id, "ok", wave_size,
+    )
     return {
-        "status": "ok",
-        "processed": processed,
+        "status": "crashed" if len(run) < len(todo) else "ok",
+        "processed": len(run),
         "skipped": len(done),
         **totals,
     }

@@ -5,20 +5,20 @@ server/celery_app.py:1469-1505; the Iceberg analog is
 ``expire_snapshots`` + a delete, SURVEY.md §2.11).
 
 On the parquet + manifest seam, deletion is a bucket rewrite: find the
-hash buckets that contain any expired row, rewrite exactly those buckets
-without the expired rows (dynamic partition overwrite, processed in
-waves like extract_job/apply_edits), and append ``status='retention'``
-manifest rows as the commit record.  Buckets with nothing to expire are
+hash buckets that contain any expired row and rewrite exactly those
+buckets without the expired rows through extract_job.rewrite_buckets
+(waves, a bucket left empty loses its directory, ``status='retention'``
+manifest rows committed per wave).  Buckets with nothing to expire are
 never rewritten, and a re-run with the same predicate is a no-op (no
 matching buckets → no writes) — the job is idempotent.
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_spark.jobs.extract_job import rewrite_buckets
 
 
 def expire_where(
@@ -47,12 +47,11 @@ def expire_where(
     Self-overwrite note: each wave reads a bucket and dynamically
     overwrites the same bucket; the staged-commit protocol makes this
     safe within one job (all task reads finish before the commit swaps
-    files), but a crash exactly between a wave's commit and the manifest
+    files), but a crash exactly between a wave's commit and its manifest
     append re-deletes idempotently on re-run (predicate matches nothing
     the second time).  On Iceberg this whole job is a single
     ``DELETE WHERE`` + ``expire_snapshots`` (SURVEY.md §2.11).
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     tbl = spark.read.parquet(output_path)
     # three-valued logic made explicit: NULL predicate = NOT expired.
     # Without the coalesce, rows where the predicate evaluates NULL fall
@@ -76,44 +75,16 @@ def expire_where(
 
         delete_documents(spark, hits.select("doc_id"), input_path)
 
-    t0 = time.perf_counter()
-    emptied: list[int] = []
-    for i in range(0, len(touched), wave_size):
-        wave = touched[i : i + wave_size]
-        keep = tbl.where(F.col("bucket").isin(wave)).where(~pred)
-        # Dynamic overwrite only rewrites partitions PRESENT in the
-        # output: a bucket whose every row expired yields no partition,
-        # so its old directory would silently survive.  Detect those
-        # BEFORE the write (collecting from `keep` afterwards would
-        # re-execute the plan over the just-replaced source files) and
-        # delete them explicitly after (Hadoop FS API — any filesystem).
-        kept_buckets = {
-            r["bucket"]
-            for r in keep.select("bucket").distinct().collect()
-        }
-        keep.write.mode("overwrite").partitionBy("bucket").parquet(output_path)
-        emptied.extend(b for b in wave if b not in kept_buckets)
-    if emptied:
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        conf = jsc.hadoopConfiguration()
-        for b in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(f"{output_path}/bucket={b}")
-            fs = p.getFileSystem(conf)
-            fs.delete(p, True)
-    wall_ms = int((time.perf_counter() - t0) * 1000)
-
-    from ocr_spark.jobs.extract_job import commit_manifest
-
-    commit_manifest(
-        spark, output_path, manifest_path, run_id, touched, wall_ms,
-        "retention",
+    done = rewrite_buckets(
+        spark,
+        lambda wave: tbl.where(F.col("bucket").isin(wave)).where(~pred),
+        touched, output_path, manifest_path, run_id, "retention", wave_size,
     )
     return {
         "status": "ok",
         "expired": n_expired,
         "touched_buckets": touched,
-        "wall_ms": wall_ms,
+        "wall_ms": done["wall_ms"],
     }
 
 

@@ -92,11 +92,11 @@ def write_training_shards(
     the data and is rewritten whole.  Returns the manifest DataFrame
     (read back from disk, so the caller sees exactly what a trainer
     would)."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     seqs = shard_assign(pack_sequences(docs, seq_len=seq_len), n_shards)
     staged = seqs.repartition(n_shards, "shard")
     (
         staged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard")
         .parquet(f"{out_path}/data")
     )

@@ -431,33 +431,3 @@ def extract_documents(
         "doc_id", "spans", *(F.col(f"meta.{f}").alias(f) for f in fields)
     ).mapInArrow(fn, OUT_DDL)
 
-
-def extract_spans_expr(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Contract-only extraction (no meta sidecar) as pure Catalyst
-    expressions — whole-stage-codegen'd, zero Python.  Semantics: order by
-    input offset, drop boilerplate and empty text spans, ocr_image → text,
-    dense re-rank.  Used when the input carries trusted offsets."""
-    ordered = F.array_sort(
-        F.expr(
-            f"filter({spans_col}, s -> s.kind != 'boilerplate' AND "
-            "(s.kind = 'media_ref' OR (s.text IS NOT NULL AND "
-            "length(trim(s.text)) > 0)))"
-        ),
-        lambda a, b: F.when(a["offset"] < b["offset"], F.lit(-1))
-        .when(a["offset"] > b["offset"], F.lit(1))
-        .otherwise(F.lit(0)),
-    )
-    rebuilt = F.transform(
-        ordered,
-        lambda s, i: F.struct(
-            F.when(s["kind"] == "media_ref", s["kind"])
-            .otherwise(F.lit("text"))
-            .alias("kind"),
-            F.when(s["kind"] == "media_ref", F.lit(None).cast("string"))
-            .otherwise(s["text"])
-            .alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    return df.withColumn("spans", rebuilt)

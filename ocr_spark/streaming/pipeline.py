@@ -151,12 +151,11 @@ def fold_stream_output(
     per batch id); the batch job's readers, edit/retention jobs and
     manifest all speak the ``bucket=`` layout.  This maintenance job
     merges the accumulated stream rows in (latest batch_id wins per
-    doc), rewrites only the touched buckets via dynamic partition
-    overwrite, commits ``status='stream-fold'`` manifest rows through
-    the shared protocol, and deletes exactly the batch directories it
-    folded (snapshot-first, so micro-batches landing DURING the fold
-    survive to the next one; a crash after the bucket write re-folds
-    identical rows — idempotent).
+    doc), rewrites only the touched buckets in one wave of the batch
+    jobs' extract_job.rewrite_buckets (``status='stream-fold'`` commit),
+    and deletes exactly the batch directories it folded (snapshot-first,
+    so micro-batches landing DURING the fold survive to the next one; a
+    crash after the bucket write re-folds identical rows — idempotent).
 
     ``input_path`` is REQUIRED (no default) because forgetting it is a
     silent correctness bug, not a tuning choice: the stream extracts RAW
@@ -170,10 +169,9 @@ def fold_stream_output(
     from pyspark.sql.window import Window
 
     from ocr_spark.jobs.extract_job import (
-        bucketed, commit_manifest, hadoop_fs, read_overlay,
+        bucketed, hadoop_fs, read_overlay, rewrite_buckets,
     )
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     jvm, fs, root = hadoop_fs(spark, stream_output_path)
     if not fs.exists(root):
         return {"status": "noop", "folded_docs": 0, "touched_buckets": []}
@@ -211,9 +209,6 @@ def fold_stream_output(
             fs.delete(p, True)  # everything pending was overlay-stale
         return {"status": "noop", "folded_docs": 0, "touched_buckets": []}
 
-    import time as _time
-
-    t0 = _time.perf_counter()
     try:
         _, out_fs, out_p = hadoop_fs(spark, output_path)
         if out_fs.exists(out_p):
@@ -227,14 +222,10 @@ def fold_stream_output(
             merged = keep.unionByName(up)
         else:
             merged = up
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(
-            output_path
-        )
-        wall_ms = int((_time.perf_counter() - t0) * 1000)
-
-        commit_manifest(
-            spark, output_path, manifest_path, run_id, touched, wall_ms,
-            "stream-fold",
+        # one wave (wave_size None), so the wave is exactly ``touched``
+        done = rewrite_buckets(
+            spark, lambda wave: merged, touched, output_path, manifest_path,
+            run_id, "stream-fold", None,
         )
     finally:
         up.unpersist()
@@ -245,7 +236,7 @@ def fold_stream_output(
         "folded_docs": n_docs,
         "folded_batches": len(snapshot),
         "touched_buckets": touched,
-        "wall_ms": wall_ms,
+        "wall_ms": done["wall_ms"],
     }
 
 

@@ -9,7 +9,7 @@ import os
 import pytest
 
 from ocr_spark import datagen, oracle
-from ocr_spark.operators.extract import extract_documents, extract_spans_expr
+from ocr_spark.operators.extract import extract_documents
 
 
 @pytest.fixture(scope="module")
@@ -79,19 +79,6 @@ def test_confidence_filter(spark, small_tables):
     for doc in docs:
         exp = oracle.extract_expected(doc, order_by="offset", conf_min=75)
         assert _spans_tuples(got[doc["doc_id"]]["spans"]) == _spans_tuples(exp)
-
-
-def test_expr_variant_matches_kernel(spark, small_tables):
-    """The pure-Catalyst contract-only path equals the Arrow kernel when
-    offsets are trusted."""
-    path, docs = small_tables["ordered"]
-    kernel = _run_and_index(spark, path, order_by="offset")
-    expr_df = extract_spans_expr(spark.read.parquet(path).select("doc_id", "spans"))
-    expr = {r["doc_id"]: r.asDict(recursive=True) for r in expr_df.collect()}
-    for doc in docs:
-        assert _spans_tuples(expr[doc["doc_id"]]["spans"]) == _spans_tuples(
-            kernel[doc["doc_id"]]["spans"]
-        )
 
 
 def test_parallel_datagen_contract(tmp_path):

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark import datagen
-from ocr_spark.operators.extract import extract_documents, extract_spans_expr
+from ocr_spark.operators.extract import extract_documents
 from ocr_spark.operators.relational import (
     q3_shipping_topk,
     q5_region_revenue,
@@ -104,14 +104,6 @@ def test_scan_pushdown_and_pruning(spark):
     )
     checks.assert_filter_pushed(q, "l_shipdate")
     checks.assert_column_pruned(q, "l_extendedprice")
-
-
-def test_expr_extraction_no_python(spark, contract_path):
-    df = spark.read.parquet(contract_path).select("doc_id", "spans")
-    out = extract_spans_expr(df)
-    plan = checks.physical_plan(out)
-    assert "Python" not in plan and "Arrow" not in plan
-    checks.assert_no_exchange(out, "extract_spans_expr")
 
 
 def test_word_index_single_shuffle(spark):
